@@ -21,7 +21,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from stac_catalog_builder_spark import oracles, synth
 from stac_catalog_builder_spark.session import read_parquet
 from stac_catalog_builder_spark.functions.cells import grid_cell_col
-from stac_catalog_builder_spark.functions.geo import rect_ring
 from stac_catalog_builder_spark.operators import dedup, sampling, similarity, textops
 from stac_catalog_builder_spark.operators.footprints import with_footprint
 from stac_catalog_builder_spark.operators.grouping import (
@@ -53,48 +52,20 @@ def _images_fp(spark: SparkSession, sf_dir: str, fan_out: bool = False) -> DataF
     return with_footprint(synth.images(spark, sf_dir, fan_out=fan_out))
 
 
-def _boundary_polygons(spark: SparkSession, sf_dir: str) -> list[dict]:
-    """Driver-side boundary dimension: 25 rectangles, consumed by the
-    polygon-dim prep (numpy, driver-side) — so load it with a direct
-    pyarrow read of nation.parquet instead of a Spark collect. The collect
-    was one whole Spark job of pure overhead (~0.25-0.4s warm) paid by
-    EVERY query that goes through ``_assigned``; the pyarrow read is ~5ms.
-    Arithmetic replicates synth.boundaries bit-for-bit (same IEEE double
-    ops in the same order; tests/test_boundary_polygons.py pins equality
-    against the Spark-collect derivation, values and row order)."""
+def _nation_keys(sf_dir: str, columns: list[str]) -> list[list[int]]:
+    """``nation`` key columns read driver-side with pyarrow (~5ms): the
+    25-row dimensions built from them are consumed driver-side anyway, and
+    a Spark collect would cost one whole job (~0.25-0.4s warm) per calling
+    query."""
     import pyarrow.parquet as pq
 
-    from stac_catalog_builder_spark.synth import (
-        GRID_DLAT,
-        GRID_DLON,
-        GRID_LAT0,
-        GRID_LON0,
-        GRID_NX,
-    )
+    tab = pq.read_table(f"{sf_dir}/nation.parquet", columns=columns)
+    return [tab.column(c).to_pylist() for c in columns]
 
-    tab = pq.read_table(
-        f"{sf_dir}/nation.parquet", columns=["n_nationkey", "n_regionkey"]
-    )
-    polys = []
-    for nk, rk in zip(
-        tab.column("n_nationkey").to_pylist(), tab.column("n_regionkey").to_pylist()
-    ):
-        tx, ty = nk % GRID_NX, nk // GRID_NX
-        rx, ry = rect_ring(
-            GRID_LON0 + tx * GRID_DLON,
-            GRID_LAT0 + ty * GRID_DLAT,
-            GRID_LON0 + (tx + 1) * GRID_DLON,
-            GRID_LAT0 + (ty + 1) * GRID_DLAT,
-        )
-        polys.append(
-            {
-                "ring_x": rx,
-                "ring_y": ry,
-                "tile_id": f"E{tx}N{ty}",
-                "collection_id": f"coll_{rk}",
-            }
-        )
-    return polys
+
+def _boundary_polygons(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """Boundary polygons for the PIP join (``synth.boundary_rings``)."""
+    return synth.boundary_rings(*_nation_keys(sf_dir, ["n_nationkey", "n_regionkey"]))
 
 
 def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,43 +73,8 @@ def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_query_points(sf_dir: str):
-    """kNN query dimension (25 rows) as a driver-side pandas frame. The knn
-    operators collect the query dimension anyway (broadcast-var contract),
-    so deriving it with a Spark plan spent one whole job (~0.25-0.4s warm)
-    per calling query; this replicates synth.knn_queries bit-for-bit from a
-    direct pyarrow read (tests/test_boundary_polygons.py pins values, order
-    and dtypes against the Spark derivation)."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    from stac_catalog_builder_spark.synth import (
-        A_LAT,
-        A_LON,
-        HOT_JITTER_SCALE,
-        HOT_JITTER_STEPS,
-        HOT_LAT0,
-        HOT_LON0,
-        LAT_STEPS,
-        LON_STEPS,
-        M32,
-        STEP_SCALE,
-    )
-
-    keys = pq.read_table(
-        f"{sf_dir}/nation.parquet", columns=["n_nationkey"]
-    ).column("n_nationkey").to_pylist()
-    qid, qlon, qlat = [], [], []
-    for n in keys:
-        qk = n + 101
-        h1, h2 = (qk * A_LON) % M32, (qk * A_LAT) % M32
-        if n % 5 == 0:
-            qlon.append(HOT_LON0 + (h1 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
-            qlat.append(HOT_LAT0 + (h2 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
-        else:
-            qlon.append(-180.0 + (h1 % LON_STEPS) / STEP_SCALE)
-            qlat.append(-60.0 + (h2 % LAT_STEPS) / STEP_SCALE)
-        qid.append(f"q_{n:04d}")
-    return pd.DataFrame({"query_id": qid, "qlon": qlon, "qlat": qlat})
+    """kNN query dimension as a pandas frame (``synth.knn_query_points``)."""
+    return synth.knn_query_points(*_nation_keys(sf_dir, ["n_nationkey"]))
 
 
 # --------------------------------------------------------------------------
@@ -189,10 +125,10 @@ def q_extent_by_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ext.select(
         "collection_id",
         F.col("n_assets"),
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        _micro("ext_w").alias("ext_w_u"),
+        _micro("ext_s").alias("ext_s_u"),
+        _micro("ext_e").alias("ext_e_u"),
+        _micro("ext_n").alias("ext_n_u"),
         F.unix_timestamp("dt_min").alias("dt_min_s"),
         F.unix_timestamp("dt_max").alias("dt_max_s"),
     )
@@ -204,10 +140,10 @@ def q_extent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "collection_id",
         "year",
         "n_assets",
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        _micro("ext_w").alias("ext_w_u"),
+        _micro("ext_s").alias("ext_s_u"),
+        _micro("ext_e").alias("ext_e_u"),
+        _micro("ext_n").alias("ext_n_u"),
     )
 
 
@@ -217,10 +153,10 @@ def q_item_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "item_id",
         "n_assets",
         "n_types",
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        _micro("ext_w").alias("ext_w_u"),
+        _micro("ext_s").alias("ext_s_u"),
+        _micro("ext_e").alias("ext_e_u"),
+        _micro("ext_n").alias("ext_n_u"),
         F.unix_timestamp("dt_min").alias("dt_min_s"),
     )
 
@@ -343,10 +279,10 @@ def q_salted_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ext.select(
         "collection_id",
         "n_assets",
-        F.floor(F.col("ext_w") * 100000.0 + 0.5).cast("bigint").alias("ext_w_u"),
-        F.floor(F.col("ext_s") * 100000.0 + 0.5).cast("bigint").alias("ext_s_u"),
-        F.floor(F.col("ext_e") * 100000.0 + 0.5).cast("bigint").alias("ext_e_u"),
-        F.floor(F.col("ext_n") * 100000.0 + 0.5).cast("bigint").alias("ext_n_u"),
+        _micro("ext_w").alias("ext_w_u"),
+        _micro("ext_s").alias("ext_s_u"),
+        _micro("ext_e").alias("ext_e_u"),
+        _micro("ext_n").alias("ext_n_u"),
         F.unix_timestamp("dt_min").alias("dt_min_s"),
         F.unix_timestamp("dt_max").alias("dt_max_s"),
     )
@@ -1301,13 +1237,9 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     A/B interleaved, output assert_frame_equal-exact). The sketch state is
     the mergeable catalog statistic a 10^12-image table needs where an
     exact distinct would shuffle every key (operators/sketches.py)."""
-    from stac_catalog_builder_spark.operators.sketches import (
-        hll_estimate,
-        hll_registers,
-    )
+    from stac_catalog_builder_spark.operators.sketches import hll_distinct
 
-    regs = hll_registers(_assigned(spark, sf_dir), ["collection_id"], "phash")
-    return hll_estimate(regs, ["collection_id"])
+    return hll_distinct(_assigned(spark, sf_dir), ["collection_id"], "phash")
 
 
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -61,22 +61,12 @@ def minhash_bands(sig: np.ndarray, bands: int) -> np.ndarray:
     return out
 
 
-def token_hash64(token: str) -> int:
-    """Stable 64-bit token hash (vectorizable polynomial + splitmix64 mix —
-    the same kernel the batch SimHash uses)."""
-    return int(
-        np.asarray(_batch_token_hash64([token.encode("utf-8", "ignore")])).view(
-            np.int64
-        )[0]
-    )
-
-
 def simhash64(tokens: list[str]) -> int:
     """64-bit SimHash over a token list: sign of per-bit weight sums.
     Single-doc wrapper of the batch kernel (identical values)."""
     if not tokens:
         return 0
-    hs = _batch_token_hash64([t.encode("utf-8", "ignore") for t in tokens])
+    hs = _batch_token_hashes([t.encode("utf-8", "ignore") for t in tokens])
     shifts = np.arange(64, dtype=np.uint64)
     bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int32)
     weights = (2 * bits - 1).sum(axis=0)
@@ -219,7 +209,7 @@ def _mix64(z: np.ndarray) -> np.ndarray:
     return z ^ (z >> np.uint64(31))
 
 
-def _batch_token_hash64(tokens: list[bytes]) -> np.ndarray:
+def _batch_token_hashes(tokens: list[bytes]) -> np.ndarray:
     """64-bit hash per token, vectorized: Horner polynomial over byte
     positions (max-token-length iterations of whole-array ops) + splitmix64
     finalizer. Replaces per-token blake2b (which forced a Python loop)."""
@@ -250,7 +240,7 @@ def batch_simhash64(texts: list[str]) -> np.ndarray:
     token_lists = [(t or "").split(" ") for t in texts]
     n_tok = np.fromiter((len(tl) for tl in token_lists), dtype=np.int64, count=len(texts))
     all_tokens = [w.encode("utf-8", "ignore") for tl in token_lists for w in tl]
-    hs = _batch_token_hash64(all_tokens)
+    hs = _batch_token_hashes(all_tokens)
     seg = np.cumsum(n_tok) - n_tok
     shifts = np.arange(64, dtype=np.uint64)
     out = np.empty(len(texts), dtype=np.int64)

@@ -16,7 +16,6 @@ and href machinery, as pure column expressions (everything codegen'd):
 - P10 precision rounding by pixel resolution (mapper.py:130-144).
 - P11 tile-id parsing "E09N27" -> (easting, northing)
   (terracatalog.py:773-791).
-- J2 path-info override merge == column-level coalesce (mapper.py:166-182).
 """
 
 from __future__ import annotations
@@ -135,14 +134,3 @@ def parse_tile_id(tile_id: Column) -> tuple[Column, Column]:
     e = F.regexp_extract(tile_id, r"E(\d+)", 1).cast("int")
     n = F.regexp_extract(tile_id, r"N(\d+)", 1).cast("int")
     return e, n
-
-
-def merge_overrides(df: DataFrame, overrides: dict[str, Column]) -> DataFrame:
-    """J2: path-info fields override raster-derived fields — a column-level
-    coalesce(parsed, original), no physical join (mapper.py:166-182)."""
-    out = df
-    for name, parsed in overrides.items():
-        out = out.withColumn(
-            name, F.coalesce(parsed, F.col(name)) if name in df.columns else parsed
-        )
-    return out

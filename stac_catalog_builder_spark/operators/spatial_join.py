@@ -8,13 +8,12 @@ Two-stage, the standard distributed spatial-join shape:
    Images join on their centroid's cell: a broadcast hash join, no shuffle
    of the fact side, prunable by Catalyst.
 2. **Exact PIP refinement**: the even-odd ray cast runs as a pure JVM
-   higher-order-function expression (``filter`` over edge indices against
-   the polygon vertex arrays carried on the broadcast row) — whole-stage
-   codegen'd, zero Python in the hot path. Measured on this host the JVM
-   refine scales with cores while a pandas-UDF refine *anti-scales* past ~8
-   local cores (python worker contention), so the UDF variant
-   (``spatial_join_pip_udf``) is kept only as the extension slot for
-   geometry kernels SQL can't express.
+   expression statically unrolled over edge slots of the polygon vertex
+   arrays carried on the broadcast row (``ray_cast_col``) — whole-stage
+   codegen'd, zero Python in the hot path. Measured on a 32-core host the
+   JVM refine scales with cores while a pandas-UDF refine *anti-scaled*
+   past ~8 local cores (python worker contention), so there is no UDF
+   refine.
 
 Skew: a hot cell (a dense city) maps to ONE cover row, so the broadcast join
 cannot skew the fact side (there is no shuffle). Skew matters only for
@@ -31,14 +30,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.cells import grid_bounds_np, grid_cell_col, grid_cover_bbox
-from ..functions.geo import (
-    point_in_polygon_np,
-    points_in_polygons_np,
-    polygon_bounds,
-)
+from ..functions.geo import point_in_polygon_np, polygon_bounds
 
 DEFAULT_COVER_RES = 7  # ~1.4-degree cells. Higher res = more cover rows
 # (still dimension-sized) but a smaller boundary fraction: only images in
@@ -97,7 +91,7 @@ def ray_cast_col(
     and measurably ANTI-scale under many local cores (GC contention); the
     unrolled form is a plain codegen'd expression tree. Polygons are
     dimension-table rows, so a small vertex cap is fine (boundary rings, not
-    coastlines — larger rings belong in spatial_join_pip_udf).
+    coastlines).
 
     Horizontal edges are excluded by the straddle test; double division by
     zero yields +/-Inf (never an error in ANSI mode), so no special-casing.
@@ -119,16 +113,20 @@ def ray_cast_col(
     return crossings % 2 == 1
 
 
-def _prepare_dimension(
-    spark, polygons: list[dict], cover_res: int, keep_cols: tuple[str, ...]
-):
-    """Driver-side prep of the broadcastable polygon dimension: cover rows
-    (cell, poly_idx) and meta rows (poly_idx, keep_cols, ring arrays)."""
-    cover_rows, meta_rows, prepared = [], [], []
+def prepare_polygon_dim(
+    spark,
+    polygons: list[dict],
+    cover_res: int = DEFAULT_COVER_RES,
+    keep_cols: tuple[str, ...] = ("tile_id", "collection_id"),
+) -> dict:
+    """One-time driver-side polygon dimension prep: cover rows
+    (cell, poly_idx, is_full) and meta rows (poly_idx, keep_cols, ring
+    arrays) as broadcastable frames. Reuse across many joins — the per-query
+    cost is then only the broadcast exchange."""
+    cover_rows, meta_rows = [], []
     for idx, poly in enumerate(polygons):
         vx = np.asarray(poly["ring_x"], dtype=np.float64)
         vy = np.asarray(poly["ring_y"], dtype=np.float64)
-        prepared.append((vx, vy))
         meta_rows.append(
             {
                 "poly_idx": idx,
@@ -146,27 +144,12 @@ def _prepare_dimension(
         cover_rows.extend(
             (int(c), idx, bool(f)) for c, f in zip(cells.tolist(), full.tolist())
         )
-    cover_df = spark.createDataFrame(
-        cover_rows, schema="cover_cell bigint, poly_idx int, is_full boolean"
-    )
-    meta_df = spark.createDataFrame(pd.DataFrame(meta_rows))
-    return cover_df, meta_df, prepared
-
-
-def prepare_polygon_dim(
-    spark,
-    polygons: list[dict],
-    cover_res: int = DEFAULT_COVER_RES,
-    keep_cols: tuple[str, ...] = ("tile_id", "collection_id"),
-) -> dict:
-    """One-time driver-side polygon dimension prep (cover classification +
-    broadcastable frames). Reuse across many joins — the per-query cost is
-    then only the broadcast exchange."""
-    cover_df, meta_df, prepared = _prepare_dimension(spark, polygons, cover_res, keep_cols)
     return {
-        "cover_df": cover_df,
-        "meta_df": meta_df,
-        "max_v": max(len(vx) for vx, _ in prepared),
+        "cover_df": spark.createDataFrame(
+            cover_rows, schema="cover_cell bigint, poly_idx int, is_full boolean"
+        ),
+        "meta_df": spark.createDataFrame(pd.DataFrame(meta_rows)),
+        "max_v": max(len(m["ring_x"]) for m in meta_rows),
         "cover_res": cover_res,
     }
 
@@ -215,45 +198,6 @@ def spatial_join_pip(
         )
     )
     return refined.drop("poly_idx", "cover_cell", "ring_x", "ring_y", "is_full")
-
-
-def spatial_join_pip_udf(
-    images: DataFrame,
-    polygons: list[dict],
-    cover_res: int = DEFAULT_COVER_RES,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    keep_cols: tuple[str, ...] = ("tile_id", "collection_id"),
-) -> DataFrame:
-    """Pandas-UDF refine variant: prepared vertex arrays ride in a Spark
-    broadcast variable, batches tested with numpy ray casting. Identical
-    output to ``spatial_join_pip`` (pytest-verified); use it only for
-    geometry kernels that exceed SQL expressions — the JVM path is faster AND
-    scales better (the UDF's python workers contend past ~8 cores/executor).
-    """
-    spark = images.sparkSession
-    cover_df, meta_df, prepared = _prepare_dimension(
-        spark, polygons, cover_res, keep_cols
-    )
-    bc = spark.sparkContext.broadcast(prepared)
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(px: pd.Series, py: pd.Series, pidx: pd.Series) -> pd.Series:
-        return pd.Series(
-            points_in_polygons_np(px.to_numpy(), py.to_numpy(), pidx.to_numpy(), bc.value)
-        )
-
-    candidates = images.withColumn(
-        "cover_cell", grid_cell_col(F.col(lon_col), F.col(lat_col), cover_res)
-    ).join(F.broadcast(cover_df), "cover_cell")
-    refined = candidates.where(
-        F.when(F.col("is_full"), F.lit(True)).otherwise(
-            pip(F.col(lon_col), F.col(lat_col), F.col("poly_idx"))
-        )
-    )
-    return refined.join(
-        F.broadcast(meta_df.drop("ring_x", "ring_y")), "poly_idx"
-    ).drop("poly_idx", "cover_cell", "is_full")
 
 
 def spatial_join_pip_partitioned(

@@ -29,25 +29,24 @@ from pyspark.sql import functions as F
 
 from .. import synth
 from ..functions.cells import grid_cell_col
-from ..functions.geo import rect_ring
 from ..operators.footprints import with_footprint
 from ..operators.grouping import collection_extents, collection_rollup, items_from_assets
 from ..operators.spatial_join import prepare_polygon_dim, spatial_join_pip
 from ..operators.tiling import with_tile
+from ..session import read_parquet
 from ..sources.catalog import write_items_partitioned
 from ..sources.checkpoint import SnapshotStore
 
 
 def boundary_polygons(spark: SparkSession, sf_dir: str) -> list[dict]:
-    rows = synth.boundaries(spark, sf_dir).collect()
-    out = []
-    for r in rows:
-        rx, ry = rect_ring(r.bbox_w, r.bbox_s, r.bbox_e, r.bbox_n)
-        out.append(
-            {"ring_x": rx, "ring_y": ry, "tile_id": r.tile_id,
-             "collection_id": r.collection_id}
-        )
-    return out
+    """Boundary polygons (``synth.boundary_rings``) from one Spark collect
+    of the ``nation`` keys."""
+    rows = (
+        read_parquet(spark, f"{sf_dir}/nation.parquet")
+        .select("n_nationkey", "n_regionkey")
+        .collect()
+    )
+    return synth.boundary_rings([r[0] for r in rows], [r[1] for r in rows])
 
 
 def build_catalog(

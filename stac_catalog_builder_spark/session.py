@@ -90,25 +90,28 @@ def get_spark(
 
 
 def read_parquet(spark: SparkSession, path: str):
-    """``spark.read.parquet`` for a single parquet FILE, with the schema
-    pre-read from the file footer driver-side (pyarrow, ~1ms) instead of
-    Spark's 1-task schema-inference job (~0.05-0.15s + a driver gap, paid
+    """``spark.read.parquet`` for a single local parquet FILE, with the
+    schema pre-read from the file footer driver-side (pyarrow, ~1ms) instead
+    of Spark's 1-task schema-inference job (~0.05-0.15s + a driver gap, paid
     once per read call — i.e. once per query per table at bench cadence,
     and by far the dominant cost of creating a DataFrame on a degraded
     host). Exactly inference-equivalent — no hardcoded schemas, the same
-    footer metadata read a different way: ``prefer_timestamp_ntz=True``
-    reproduces Spark's parquet mapping (isAdjustedToUTC=false -> NTZ);
+    footer metadata read a different way, with NTZ-ness taken from the
+    session's ``spark.sql.parquet.inferTimestampNTZ.enabled`` as Spark's own
+    inference does (isAdjustedToUTC=false -> NTZ only when it is on);
     tests/test_read_schema.py pins schema equality for every shipped table
-    at every SF tier. Directories still go through plain
-    ``spark.read.parquet`` (multi-file footer merge is Spark's job)."""
+    at every SF tier. URIs (``scheme://``) and directories still go through
+    plain ``spark.read.parquet``: Hadoop filesystems are Spark's to resolve,
+    and a multi-file footer merge is Spark's job."""
     import os as _os
 
-    if _os.path.isdir(path):
+    if "://" in path or _os.path.isdir(path):
         return spark.read.parquet(path)
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=ntz)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -27,9 +27,11 @@ All boundary constants are chosen OFF the data lattice (5-decimal offsets vs
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.geo import rect_ring
 from .session import read_parquet
 
 # --- shared constants (mirrored in oracles.py SQL and numpy fixtures) ---
@@ -169,12 +171,53 @@ def images(
     )
 
 
+def boundary_rings(nation_keys, region_keys) -> list[dict]:
+    """The boundary dimension as polygon dicts (``ring_x``/``ring_y``,
+    ``tile_id``, ``collection_id``) for ``spatial_join_pip``, from the
+    ``nation`` key values in row order. The same IEEE double ops in the same
+    order as ``boundaries`` (tests/test_boundary_polygons.py pins them equal),
+    so callers that need the rings driver-side pay no Spark job for them."""
+    polys = []
+    for nk, rk in zip(nation_keys, region_keys):
+        tx, ty = nk % GRID_NX, nk // GRID_NX
+        rx, ry = rect_ring(
+            GRID_LON0 + tx * GRID_DLON,
+            GRID_LAT0 + ty * GRID_DLAT,
+            GRID_LON0 + (tx + 1) * GRID_DLON,
+            GRID_LAT0 + (ty + 1) * GRID_DLAT,
+        )
+        polys.append(
+            {"ring_x": rx, "ring_y": ry, "tile_id": f"E{tx}N{ty}",
+             "collection_id": f"coll_{rk}"}
+        )
+    return polys
+
+
+def knn_query_points(nation_keys) -> pd.DataFrame:
+    """The kNN query dimension as a pandas frame (``query_id``, ``qlon``,
+    ``qlat``) from the ``nation`` key values in row order; equal to
+    ``knn_queries(...).toPandas()`` (tests/test_boundary_polygons.py)."""
+    qid, qlon, qlat = [], [], []
+    for n in nation_keys:
+        qk = n + 101
+        h1, h2 = (qk * A_LON) % M32, (qk * A_LAT) % M32
+        if n % 5 == 0:
+            qlon.append(HOT_LON0 + (h1 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
+            qlat.append(HOT_LAT0 + (h2 % HOT_JITTER_STEPS) / HOT_JITTER_SCALE)
+        else:
+            qlon.append(-180.0 + (h1 % LON_STEPS) / STEP_SCALE)
+            qlat.append(-60.0 + (h2 % LAT_STEPS) / STEP_SCALE)
+        qid.append(f"q_{n:04d}")
+    return pd.DataFrame({"query_id": qid, "qlon": qlon, "qlat": qlat})
+
+
 def boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boundary/tile dimension table: one rectangle per ``nation`` row.
 
     5x5 world grid; ``collection_id`` comes from the nation→region key —
     the Spark analogue of the reference's item→collection association
-    (builder.py:470-475). Tiny (25 rows): always broadcast.
+    (builder.py:470-475). Tiny (25 rows): always broadcast. The lazy-plan
+    form of ``boundary_rings``.
     """
     nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
     j = F.col("n_nationkey")
@@ -198,6 +241,7 @@ def knn_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN query points: one per nation row, scrambled placement, k=5.
 
     A fifth of the points land inside the hot cluster (FIXTURES.md §4).
+    The lazy-plan form of ``knn_query_points``.
     """
     nation = read_parquet(spark, f"{sf_dir}/nation.parquet")
     qk = F.col("n_nationkey") + F.lit(101)

@@ -7,6 +7,7 @@ tests/conftest.py) with Spark in place of mock GeoTIFF fixtures.
 from __future__ import annotations
 
 import sys
+from glob import glob
 from pathlib import Path
 
 import pytest
@@ -18,6 +19,8 @@ from stac_catalog_builder_spark.session import get_spark  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
+# every shipped SF tier, including the one the bench measures
+SF_TIERS = sorted(glob(str(Path(SF0001).parent / "sf*")))
 
 
 @pytest.fixture(scope="session")

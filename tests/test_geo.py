@@ -13,7 +13,6 @@ import pytest
 from stac_catalog_builder_spark.functions.geo import (
     haversine_np,
     point_in_polygon_np,
-    points_in_polygons_np,
     rect_ring,
     utm_forward_np,
 )
@@ -88,16 +87,6 @@ def test_pip_adjacent_cells_partition():
     in_l = point_in_polygon_np(px, py, *left)
     in_r = point_in_polygon_np(px, py, *right)
     assert ((in_l.astype(int) + in_r.astype(int)) == 1).all()
-
-
-def test_points_in_polygons_pairs():
-    polys = [rect_ring(0, 0, 1, 1), rect_ring(2, 2, 3, 3)]
-    px = np.array([0.5, 2.5, 0.5, 2.5])
-    py = np.array([0.5, 2.5, 2.5, 0.5])
-    idx = np.array([0, 1, 0, 1])
-    assert points_in_polygons_np(px, py, idx, polys).tolist() == [
-        True, True, False, False,
-    ]
 
 
 def test_spatial_join_nonrectangular_polygons(spark):
