@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cells import grid_bounds_np, grid_cell_col, grid_cover_bbox
 from ..functions.geo import point_in_polygon_np, polygon_bounds
+from ..session import local_frame
 
 DEFAULT_COVER_RES = 7  # ~1.4-degree cells. Higher res = more cover rows
 # (still dimension-sized) but a smaller boundary fraction: only images in
@@ -122,7 +123,12 @@ def prepare_polygon_dim(
     """One-time driver-side polygon dimension prep: cover rows
     (cell, poly_idx, is_full) and meta rows (poly_idx, keep_cols, ring
     arrays) as broadcastable frames. Reuse across many joins — the per-query
-    cost is then only the broadcast exchange."""
+    cost is then only the broadcast exchange.
+
+    Both frames are Arrow-built local relations (``LocalTableScan``), so a
+    broadcast of them runs no Python worker; a row-list ``createDataFrame``
+    would re-run a pickled PythonRDD stage in Python workers on every
+    broadcast."""
     cover_rows, meta_rows = [], []
     for idx, poly in enumerate(polygons):
         vx = np.asarray(poly["ring_x"], dtype=np.float64)
@@ -145,8 +151,8 @@ def prepare_polygon_dim(
             (int(c), idx, bool(f)) for c, f in zip(cells.tolist(), full.tolist())
         )
     return {
-        "cover_df": spark.createDataFrame(
-            cover_rows, schema="cover_cell bigint, poly_idx int, is_full boolean"
+        "cover_df": local_frame(
+            spark, cover_rows, "cover_cell bigint, poly_idx int, is_full boolean"
         ),
         "meta_df": spark.createDataFrame(pd.DataFrame(meta_rows)),
         "max_v": max(len(m["ring_x"]) for m in meta_rows),

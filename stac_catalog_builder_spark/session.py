@@ -115,6 +115,34 @@ def read_parquet(spark: SparkSession, path: str):
     return spark.read.schema(schema).parquet(path)
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """Build a small driver-side frame from row tuples: ``rows`` (tuples in
+    ``schema`` column order) become a ``pyarrow.Table`` that Spark turns
+    into a ``LocalRelation`` (executed as ``LocalTableScan``, JVM-only).
+
+    ``spark.createDataFrame(<list>, schema)`` instead pickles the rows,
+    parallelizes them and applies the schema through a PythonRDD: every
+    execution of that frame (each broadcast of a dimension, say) runs a
+    stage in Python workers, and the plan shows only ``Scan ExistingRDD``.
+    An Arrow table has no silent fallback to that path. ``schema`` is a DDL
+    string or a ``StructType``; the frame's names, types and nullability
+    equal the list path's (tests/test_local_frame.py pins every schema the
+    engine builds this way)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _parse_local_cores(master: str, default: int) -> int:
     inner = master[len("local[") : -1]
     if inner == "*":

@@ -16,10 +16,10 @@ Resume = left_anti join of the pending work's partition keys against
 so a re-run only computes missing partitions.
 
 Exactly-once per partition:
-- the data write uses **dynamic partition overwrite**
-  (``spark.sql.sources.partitionOverwriteMode=dynamic`` + ``mode("overwrite")``)
-  so a crash-retry *replaces* a partially-committed partition instead of
-  appending duplicate rows;
+- the data write uses **dynamic partition overwrite** (the writer option
+  ``partitionOverwriteMode=dynamic`` + ``mode("overwrite")``; the session
+  conf is never touched) so a crash-retry *replaces* a partially-committed
+  partition instead of appending duplicate rows;
 - ``_metrics`` and ``_lineage`` are themselves partitioned by ``part_key``
   and written with dynamic overwrite, so every step of the commit protocol is
   an idempotent per-partition upsert — any crash/retry interleaving converges
@@ -32,9 +32,10 @@ parquet footer metadata), never by re-running the upstream stage DAG — a
 naive ``df.count()``-style metrics pass would double the cost of every
 checkpointed write.
 
-Partition keys round-trip as **strings** (their Hive directory form);
-partition-column type inference is disabled on read so keys are stable and
-engine-independent.
+Partition keys round-trip as **strings** (their Hive directory form): the
+store reads its own tables with a known schema that types the partition
+column as string, so keys are stable and engine-independent without
+disabling partition-column type inference.
 """
 
 from __future__ import annotations
@@ -47,7 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
+from ..session import local_frame
+
 _INFER_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
 
 
@@ -61,35 +63,40 @@ def _dynamic_overwrite(
     parallel writer per directory instead of N input tasks each appending a
     file to every directory (N*P small files at scale; fully serial when
     the input is a single-row-group scan). Skipped for the dimension-sized
-    metrics/lineage upserts, where a shuffle is pure overhead."""
-    spark = df.sparkSession
+    metrics/lineage upserts, where a shuffle is pure overhead.
+
+    The mode is a writer option, not session conf: a query planned
+    concurrently on the same session keeps the session's own mode."""
     if cluster:
         df = df.repartition(F.col(part_col))
-    prev = spark.conf.get(_OVERWRITE_MODE_KEY, "static")
-    spark.conf.set(_OVERWRITE_MODE_KEY, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(part_col).parquet(str(path))
-    finally:
-        spark.conf.set(_OVERWRITE_MODE_KEY, prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(str(path))
+    )
 
 
 def _read_keyed(
     spark: SparkSession, path: Path, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Read a part_key-partitioned table with type inference OFF, so the
-    partition key always comes back as the string written in the dir name.
+    """Read a part_key-partitioned table so the partition key always comes
+    back as the string written in the dir name.
 
     ``schema``: the known readback schema (data columns in file order, the
-    partition column LAST as string — what inference would produce). The
-    store wrote every table it reads back, so the schema is available
-    without Spark's 1-task footer-inference job per read; callers that
-    cannot know it (external tables) pass None and pay inference.
+    partition column LAST as string — what inference-off reads produce).
+    The store wrote every table it reads back, so the schema is available
+    without Spark's 1-task footer-inference job per read, and a
+    user-specified partition column type is taken as given (no value
+    inference), so the session conf is left alone. Callers that cannot
+    know it (``read_stage``) pass None and pay inference, with
+    partition-column type inference switched off around the read.
     tests/test_checkpoint.py pins known-schema == inferred-schema reads."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(str(path))
     prev = spark.conf.get(_INFER_KEY, "true")
     spark.conf.set(_INFER_KEY, "false")
     try:
-        if schema is not None:
-            return spark.read.schema(schema).parquet(str(path))
         return spark.read.parquet(str(path))
     finally:
         spark.conf.set(_INFER_KEY, prev)
@@ -229,7 +236,8 @@ class SnapshotStore:
         ]
         mrows = [(k, counts[k]) for k in new_keys + refreshed]
         if mrows:
-            metrics_df = spark.createDataFrame(
+            metrics_df = local_frame(
+                spark,
                 [(k, n, stage) for k, n in mrows],
                 "part_key string, n_rows bigint, stage string",
             )
@@ -240,8 +248,8 @@ class SnapshotStore:
         if new_keys:
             # 4. lineage last = commit marker (also an idempotent upsert;
             #    refreshed keys are already committed — no new marker needed)
-            lineage_df = spark.createDataFrame(
-                [(k, stage) for k in new_keys], "part_key string, stage string"
+            lineage_df = local_frame(
+                spark, [(k, stage) for k in new_keys], "part_key string, stage string"
             )
             _dynamic_overwrite(
                 lineage_df, self._lineage_path(stage), "part_key", cluster=False
@@ -261,6 +269,10 @@ class SnapshotStore:
 
     # -- read ---------------------------------------------------------------
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
+        """The stage's data. Its schema is the writer's, unknown here, so
+        this read infers it — and, alone among the store's reads, still
+        switches partition-column type inference off on the session for the
+        duration of the read so the key comes back as a string."""
         return _read_keyed(spark, self._data_path(stage))
 
     def metrics(self, spark: SparkSession, stage: str) -> DataFrame:

@@ -210,3 +210,42 @@ def test_known_readback_schemas_match_inference(spark, store):
         )
     )
     assert a == b
+
+
+def test_pending_and_write_stage_leave_session_conf_alone(spark, store, monkeypatch):
+    """The store's own reads and writes make no ``spark.conf.set`` call: a
+    query planned concurrently on the same session never sees a temporary
+    overwrite mode or inference setting. Partition keys still round-trip
+    as the strings written ('01' stays '01' with inference on)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from stac_catalog_builder_spark.sources import checkpoint as cp
+
+    assert spark.conf.get(cp._INFER_KEY, "true") == "true"
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    keys = ["01", "10", "a b"]
+    df1 = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "part_key string, v int"
+    )
+    snap1 = store.write_stage(df1, "nc", "part_key")
+    # second write: the committed-lineage read, the metrics read and the
+    # upserts all run against existing tables
+    df2 = spark.createDataFrame([("01", 7), ("2", 8)], "part_key string, v int")
+    snap2 = store.write_stage(df2, "nc", "part_key")
+    pending = store.pending(_work(spark, ["01", "1", "2", "3"]), spark, "nc", "part_key")
+    got_pending = sorted(r.part_key for r in pending.collect())
+    metrics = {r.part_key: r.n_rows for r in store.metrics(spark, "nc").collect()}
+    assert calls == []
+    assert sorted(snap1["partitions"]) == keys
+    assert snap2["partitions"] == ["2"] and snap2["refreshed"] == []
+    assert got_pending == ["1", "3"]
+    assert metrics == {"01": 1, "10": 1, "a b": 1, "2": 1}
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    assert mode.lower() == "static"

@@ -40,6 +40,21 @@ def flagship_plan(spark):
 
 def test_flagship_has_no_python_in_hot_path(flagship_plan):
     assert "Python" not in flagship_plan  # no BatchEvalPython/ArrowEvalPython
+    # a row-list createDataFrame plans as "Scan ExistingRDD" over a
+    # PythonRDD: Python workers run each time the frame is scanned
+    assert "ExistingRDD" not in flagship_plan
+
+
+def test_polygon_cover_is_a_local_relation(spark):
+    """The cover table is broadcast on every join: it must be a JVM-side
+    LocalTableScan, not a PythonRDD scan re-run per broadcast."""
+    from stac_catalog_builder_spark.operators.spatial_join import (
+        prepare_polygon_dim,
+    )
+
+    dim = prepare_polygon_dim(spark, e._boundary_polygons(spark, SF))
+    plan = _plan(dim["cover_df"])
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_flagship_joins_broadcast_only(flagship_plan):
